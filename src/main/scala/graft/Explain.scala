@@ -1,6 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.graftshim.SchedulerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+  BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec,
+  SortMergeJoinExec}
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-hygiene inspector.
   *
@@ -9,33 +25,20 @@ import org.apache.spark.sql.SparkSession
   * default set) so scan pushdown, broadcast choices, and
   * WholeStageCodegen spans can be reviewed.
   *
-  * `runMain graft.Explain --audit [sfDir]` — one summary line per
-  * declared query: shuffle / join-node counts, flagging nested-loop
-  * joins outside the intended set (broadcast grids, scalars, centroid
-  * assignment, and the documented brute-force baselines). The audit is
-  * the mechanical form of the "explain-and-iterate" discipline: a new
-  * query that silently plans a cartesian shows up here before it shows
-  * up in the bench.
-  *
-  * The audit runs in no-checkpoint mode
-  * (`-Dgraft.noCheckpoint=true`, consumed by [[Checkpoints]]): the
-  * operators skip `localCheckpoint`, so the audited plan covers the
-  * FULL dataflow of the iterative/spine queries — including the
-  * segments a checkpoint would truncate. Iterative plans grow per
-  * round without truncation, so audit at sf0.001 (loops converge in a
-  * few rounds there); production runs keep checkpointing on.
-  *
-  * `runMain graft.Explain --audit-runtime [sfDir]` — the COMPLEMENT:
-  * checkpoints stay ON (the production configuration) and each query
-  * is EXECUTED through the noop sink while a SparkListener counts what
-  * actually ran — jobs, completed stages, and skipped stages (AQE
-  * exchange reuse). The static audit's exchange counts describe the
-  * untruncated plan (q104 counts thousands of planned exchanges the
-  * runtime never executes once checkpoints cut the lineage); this pass
-  * records the executed truth, so a bench regression can be matched to
-  * an executed-plan change rather than an audit artifact (r12 VERDICT
-  * item 6). Results merge into AUDIT.json as rt_* keys next to the
-  * static counts.
+  * `runMain graft.Explain --audit [sfDir] [queryName...]` — one
+  * summary line per query (all declared queries by default) and an
+  * `AUDIT.json` record (`GRAFT_AUDIT_OUT` overrides the path). The
+  * audit describes the plans that EXECUTED, in the production
+  * configuration: checkpoints on, one warm pass (builds the
+  * session-pinned spines and persisted indexes a query serves from),
+  * then one measured pass through the noop sink — see [[audit]]. Its
+  * counts cover every SQL execution the query runs, so the work inside
+  * iterative loops (each round's `localCheckpoint`, loop-guard
+  * `count`s) is audited where it runs; RDD-API actions are not SQL
+  * executions and are not counted. Nested-loop joins outside the intended set
+  * (broadcast grids, scalars, centroid assignment, and the documented
+  * brute-force baselines) are flagged: a new query that silently plans
+  * a cartesian shows up here before it shows up in the bench.
   */
 object Explain {
 
@@ -127,68 +130,147 @@ object Explain {
     "q211_ann_mrr_at_k",    // brute-force exact side (q28) + centroid assignment (q51)
     "q215_hard_negatives")  // brute-force exact side (q28) + centroid assignment (q51)
 
-  /** Per-query runtime counters: jobs started, stages submitted with
-    * them, stages actually completed. Skipped = submitted − completed
-    * (AQE exchange reuse / already-computed checkpoint parents).
-    * `lastEvent` supports the post-action quiescence wait — the
-    * listener bus is asynchronous, so counts settle shortly after the
-    * action returns. */
-  private final class RuntimeCounts
-      extends org.apache.spark.scheduler.SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    // distinct stage ids planned by job DAGs vs actually submitted:
-    // a stage in a DAG that never submits was SKIPPED (its output was
-    // already available) — the UI's definition, computed directly
-    // instead of the old max(0, planned - completions) clamp, which
-    // both under-counted (retry attempts inflated completions) and
-    // could hide real skips behind failures.
-    private val plannedIds =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    private val submittedIds =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val attempts = new java.util.concurrent.atomic.AtomicInteger
-    val completedOk = new java.util.concurrent.atomic.AtomicInteger
-    val failed = new java.util.concurrent.atomic.AtomicInteger
-    @volatile var lastEvent: Long = System.nanoTime()
-    private def touch(): Unit = lastEvent = System.nanoTime()
-    override def onJobStart(
-        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+  /** One query's audit: node counts over the AQE-final physical plans
+    * of every SQL execution of the measured pass, plus its jobs and
+    * stages. `warmNlj` is the nested-loop-join count of the warm pass.
+    * `singlePartitionWindows` counts `WindowExec` nodes with an empty
+    * partition spec — one task sees every row (recorded, not gated).
+    * Skipped stages were planned but never submitted (AQE exchange
+    * reuse, already-computed checkpoint parents). */
+  final case class Audit(executions: Int, shuffles: Int, bhj: Int,
+                         smj: Int, shj: Int, nlj: Int, warmNlj: Int,
+                         singlePartitionWindows: Int, jobs: Int,
+                         stages: Int, stagesSkipped: Int, stagesFailed: Int,
+                         stageRetries: Int, ok: Boolean, nljIntended: Boolean) {
+    def unintendedNlj: Boolean = (nlj > 0 || warmNlj > 0) && !nljIntended
+    /** This query's AUDIT.json object. */
+    def json: String = Seq("executions" -> executions,
+      "shuffles" -> shuffles, "bhj" -> bhj, "smj" -> smj, "shj" -> shj,
+      "nlj" -> nlj, "warm_nlj" -> warmNlj, "nlj_intended" -> nljIntended,
+      "unintended_nlj" -> unintendedNlj,
+      "single_partition_windows" -> singlePartitionWindows,
+      "rt_jobs" -> jobs, "rt_stages" -> stages,
+      "rt_stages_skipped" -> stagesSkipped,
+      "rt_stages_failed" -> stagesFailed, "rt_stage_retries" -> stageRetries,
+      "rt_ok" -> ok).map { case (k, v) => s""""$k": $v""" }
+      .mkString("{", ", ", "}")
+  }
+
+  /** The audit's single listener: plan census from the
+    * `QueryExecutionListener` callbacks, job/stage counts from the
+    * scheduler events. Both arrive on the listener bus, which the
+    * caller drains before reading. */
+  private final class Census extends SparkListener
+      with QueryExecutionListener with AdaptiveSparkPlanHelper {
+    val executions, shuffles, bhj, smj, shj, nlj, windows1, jobs,
+      attempts, completedOk, failed = new AtomicInteger
+    private val plannedIds = ConcurrentHashMap.newKeySet[Int]()
+    private val submittedIds = ConcurrentHashMap.newKeySet[Int]()
+
+    override def onSuccess(funcName: String, qe: QueryExecution,
+                           durationNs: Long): Unit = {
+      executions.incrementAndGet()
+      // collect() walks the FINAL adaptive plan (query stages
+      // included); the plan's string would also print the initial one
+      collectWithSubqueries(qe.executedPlan) { case p => p }.foreach {
+        case _: ShuffleExchangeLike => shuffles.incrementAndGet()
+        case _: BroadcastHashJoinExec => bhj.incrementAndGet()
+        case _: SortMergeJoinExec => smj.incrementAndGet()
+        case _: ShuffledHashJoinExec => shj.incrementAndGet()
+        case _: BroadcastNestedLoopJoinExec | _: CartesianProductExec =>
+          nlj.incrementAndGet()
+        case w: WindowExec if w.partitionSpec.isEmpty =>
+          windows1.incrementAndGet()
+        case _ =>
+      }
+    }
+    // failed executions are not counted; a query that fails reports
+    // ok = false
+    override def onFailure(funcName: String, qe: QueryExecution,
+                           exception: Exception): Unit = ()
+
+    override def onJobStart(js: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet()
       js.stageInfos.foreach(si => plannedIds.add(si.stageId))
-      touch()
     }
-    override def onStageSubmitted(
-        ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
+    override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit = {
       attempts.incrementAndGet()
       submittedIds.add(ss.stageInfo.stageId)
-      touch()
     }
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
       if (sc.stageInfo.failureReason.isEmpty) completedOk.incrementAndGet()
       else failed.incrementAndGet()
-      touch()
+
+    def result(ok: Boolean, warmNlj: Int, nljIntended: Boolean): Audit =
+      Audit(executions.get, shuffles.get, bhj.get, smj.get, shj.get,
+        nlj.get, warmNlj, windows1.get, jobs.get, completedOk.get,
+        plannedIds.size - submittedIds.size, failed.get,
+        attempts.get - submittedIds.size, ok, nljIntended)
+  }
+
+  /** Audit one query the way Bench runs it: a warm pass, then a
+    * measured pass through the noop sink, then `Checkpoints.releaseAll`.
+    * Each pass has its own [[Census]]. The audit reports the measured
+    * pass; of the warm pass it keeps only the nested-loop-join count,
+    * because first-toucher builds (session-pinned spines, persisted
+    * indexes) execute there and nowhere else. `build` is called once
+    * per pass (checkpoints inside it execute at build time, so they
+    * are part of that pass). */
+  def audit(spark: SparkSession, name: String,
+            build: SparkSession => DataFrame): Audit = {
+    val sc = spark.sparkContext
+    def pass(label: String): (Census, Boolean) = {
+      SchedulerBridge.drainListenerBus(sc) // no earlier event leaks in
+      val c = new Census
+      sc.addSparkListener(c)
+      spark.listenerManager.register(c)
+      val ok =
+        try {
+          build(spark).write.format("noop").mode("overwrite").save()
+          true
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[audit] $name $label pass FAILED: ${e.getMessage}")
+          false
+        } finally {
+          SchedulerBridge.drainListenerBus(sc)
+          spark.listenerManager.unregister(c)
+          sc.removeSparkListener(c)
+        }
+      (c, ok)
     }
-    /** Planned-but-never-submitted stages (reused outputs). */
-    def skipped: Int = plannedIds.size - submittedIds.size
-    /** Re-attempts beyond each stage's first submission. */
-    def retries: Int = attempts.get - submittedIds.size
-    /** Wait until no listener event has arrived for `quietMs`. */
-    def quiesce(quietMs: Long = 250, capMs: Long = 5000): Unit = {
-      val deadline = System.nanoTime() + capMs * 1000000L
-      while (System.nanoTime() - lastEvent < quietMs * 1000000L &&
-             System.nanoTime() < deadline) Thread.sleep(25)
+    val (warm, _) = pass("warm")
+    val (c, ok) = try pass("measured") finally Checkpoints.releaseAll(spark)
+    c.result(ok, warm.nlj.get, intendedNlj(name))
+  }
+
+  private def auditAll(spark: SparkSession, sfDir: String,
+                       names: Seq[String]): Unit = {
+    val audits = names.map { n =>
+      val a = audit(spark, n, SparkEntry.queries(n)(_, sfDir))
+      val flag = if (a.unintendedNlj) "  <-- UNINTENDED NLJ" else ""
+      println(f"[audit] $n%-28s exec=${a.executions}%-4d " +
+        f"shuf=${a.shuffles}%-4d bhj=${a.bhj}%-4d smj=${a.smj}%-3d " +
+        f"shj=${a.shj}%-3d nlj=${a.nlj}%-3d warm_nlj=${a.warmNlj}%-3d " +
+        f"win1=${a.singlePartitionWindows}%-2d " +
+        f"jobs=${a.jobs}%-4d stages=${a.stages}%-4d" +
+        (if (a.ok) "" else " FAILED") + flag)
+      n -> a
     }
+    val flagged = audits.count(_._2.unintendedNlj)
+    println(s"[audit] ${names.size} queries, $flagged unintended nested-loop plans")
+    val rows = audits.map { case (n, a) => s""""$n": ${a.json}""" }
+    val out = sys.env.getOrElse("GRAFT_AUDIT_OUT", "AUDIT.json")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
+      rows.mkString(s"""{"sf": "$sfDir", "plans": "executed", """ +
+        s""""unintended_nlj_total": $flagged, "queries": {""", ",\n", "}}"))
   }
 
   def main(args: Array[String]): Unit = {
-    val audit = args.headOption.contains("--audit")
-    val auditRt = args.headOption.contains("--audit-runtime")
-    if (audit) System.setProperty(Checkpoints.NoCheckpointProp, "true")
-    val rest = if (audit || auditRt) args.drop(1) else args
+    val isAudit = args.headOption.contains("--audit")
+    val rest = if (isAudit) args.drop(1) else args
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (rest.length > 1) rest.drop(1).toSeq
-      else if (audit || auditRt) SparkEntry.queries.keys.toSeq.sorted
+      else if (isAudit) SparkEntry.queries.keys.toSeq.sorted
       else Seq("q01_pricing_summary", "q03_topk_revenue", "q05_region_volume",
         "q15_cosupply_edges", "q28_cosine_topk")
     val spark = SparkSession.builder()
@@ -199,83 +281,10 @@ object Explain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    if (auditRt) {
-      val rows = names.map { n =>
-        // WARM pass, unmeasured: builds the session-pinned spines,
-        // persisted indexes, and same-file fixtures this query serves
-        // from, so the measured pass records the query's OWN dataflow
-        // — not the first-toucher build cost the r15 verdict flagged
-        // as attribution noise. Spines are NOT released between the
-        // two passes (release happens after the measured pass).
-        try SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () } // measured pass reports it
-        val c = new RuntimeCounts
-        spark.sparkContext.addSparkListener(c)
-        val ok =
-          try {
-            SparkEntry.queries(n)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-            true
-          } catch { case e: Throwable =>
-            System.err.println(s"[audit-rt] $n FAILED: ${e.getMessage}")
-            false
-          } finally {
-            Checkpoints.releaseAll(spark)
-            c.quiesce()
-            spark.sparkContext.removeSparkListener(c)
-          }
-        println(f"[audit-rt] $n%-28s jobs=${c.jobs.get}%-4d " +
-          f"stages=${c.completedOk.get}%-5d skipped=${c.skipped}%-5d " +
-          f"failed=${c.failed.get}%-3d retries=${c.retries}%-3d " +
-          (if (ok) "" else "FAILED"))
-        s""""$n": {"rt_jobs": ${c.jobs.get}, """ +
-          s""""rt_stages": ${c.completedOk.get}, """ +
-          s""""rt_stages_skipped": ${c.skipped}, """ +
-          s""""rt_stages_failed": ${c.failed.get}, """ +
-          s""""rt_stage_retries": ${c.retries}, "rt_ok": $ok}"""
-      }
-      println(s"[audit-rt] ${names.size} queries executed")
-      val out = sys.env.getOrElse("GRAFT_AUDIT_RT_OUT", "AUDIT_runtime.json")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
-        rows.mkString(s"""{"sf": "$sfDir", "queries": {""", ",\n", "}}"))
-    } else if (audit) {
-      var flagged = 0
-      val rows = names.map { n =>
-        val plan = SparkEntry.queries(n)(spark, sfDir)
-          .queryExecution.executedPlan.toString
-        def cnt(p: String) = p.r.findAllIn(plan).size
-        val nlj = cnt("BroadcastNestedLoopJoin") + cnt("CartesianProduct")
-        val unintended = nlj > 0 && !intendedNlj(n)
-        val flag = if (unintended) { flagged += 1; "  <-- UNINTENDED NLJ" }
-                   else ""
-        // shuffle exchanges only (hash/range) — "Exchange" alone would
-        // also match every BroadcastExchange and overstate shuffles.
-        // (WholeStageCodegen spans are not counted: AQE materializes
-        // them lazily, so the pre-execution plan string shows none)
-        val shuffles = cnt("Exchange hashpartitioning") +
-          cnt("Exchange rangepartitioning") + cnt("Exchange SinglePartition") +
-          cnt("Exchange RoundRobinPartitioning")
-        val (bhj, smj, shj) =
-          (cnt("BroadcastHashJoin"), cnt("SortMergeJoin"), cnt("ShuffledHashJoin"))
-        println(f"[audit] $n%-28s shuf=$shuffles%-3d bhj=$bhj%-3d smj=$smj%-3d shj=$shj%-3d nlj=$nlj%-2d$flag")
-        s""""$n": {"shuffles": $shuffles, "bhj": $bhj, "smj": $smj, """ +
-          s""""shj": $shj, "nlj": $nlj, "nlj_intended": ${intendedNlj(n)}, """ +
-          s""""unintended_nlj": $unintended}"""
-      }
-      println(s"[audit] ${names.size} queries, $flagged unintended nested-loop plans")
-      // machine-readable per-round artifact (the prose line above used
-      // to be the only record): query → plan counts + NLJ verdict
-      val out = sys.env.getOrElse("GRAFT_AUDIT_OUT", "AUDIT.json")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
-        rows.mkString(
-          s"""{"sf": "$sfDir", "unintended_nlj_total": $flagged, "queries": {""",
-          ",\n", "}}"))
-    } else {
-      names.foreach { n =>
-        println(s"\n===== $n =====")
-        SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-      }
+    if (isAudit) auditAll(spark, sfDir, names)
+    else names.foreach { n =>
+      println(s"\n===== $n =====")
+      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -38,20 +38,30 @@ class CheckpointHygieneSpec extends AnyFunSuite with SparkTestBase {
       s"stale blocks after invalidateSpine: $afterInvalidate")
   }
 
-  test("no-checkpoint mode makes checkpoint() the identity (audit sees full plans)") {
-    import spark.implicits._
-    System.setProperty(Checkpoints.NoCheckpointProp, "true")
-    try {
-      val df = Seq(1, 2, 3).toDF("x")
-      val cp = Checkpoints.checkpoint(df)
-      assert(cp eq df) // identity: no job ran, no block pinned
-      Checkpoints.release(cp) // structural no-op, must not throw
-      // an iterative operator still computes correctly, un-truncated
-      val edges = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
-      val comps = graft.operators.Graph.connectedComponents(edges)
-        .as[(Long, Long)].collect().toMap
-      assert(comps.values.toSet == Set(1L))
-    } finally System.clearProperty(Checkpoints.NoCheckpointProp)
+  test("audit counts executed plans behind a checkpoint (NLJ inside an intermediate)") {
+    import org.apache.spark.sql.functions.col
+    // the cross join runs only inside the checkpointed intermediate:
+    // the returned frame's own plan scans the checkpoint block
+    val build = (s: org.apache.spark.sql.SparkSession) => {
+      val grid = Checkpoints.checkpoint(
+        s.range(3).crossJoin(s.range(2).withColumnRenamed("id", "j")))
+      grid.groupBy(col("id")).count()
+    }
+    val own = build(spark).queryExecution.executedPlan.toString
+    Checkpoints.releaseAll(spark)
+    assert(!own.contains("NestedLoopJoin") && !own.contains("CartesianProduct"))
+    val a = Explain.audit(spark, "adhoc_checkpointed_cross", build)
+    assert(a.ok && a.executions >= 2, a)
+    assert(a.nlj >= 1, a)
+    assert(a.unintendedNlj, a)
+    assert(Checkpoints.trackedCount(spark, includePinned = false) == 0)
+  }
+
+  test("audit runs q98 with checkpoints on and flags no unintended NLJ") {
+    val a = Explain.audit(spark, "q98_citation_pagerank",
+      SparkEntry.queries("q98_citation_pagerank")(_, "/root/testdata/sf0.001"))
+    assert(a.ok && a.jobs > 0, a)
+    assert(!a.unintendedNlj, a)
   }
 
   test("iterative loops retain at most two rounds of state while running") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole forked test JVM. */
@@ -12,6 +14,13 @@ object SparkTestBase {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // Two expected warnings would flood the log: every
+    // `Checkpoints.release` unpersists a locally checkpointed
+    // MapPartitionsRDD, and every global window logs "No Partition
+    // Defined" (the audit records those as single_partition_windows).
+    Seq("org.apache.spark.rdd.MapPartitionsRDD",
+      "org.apache.spark.sql.execution.window.WindowExec")
+      .foreach(Configurator.setLevel(_, Level.ERROR))
     s
   }
 }

@@ -4,12 +4,17 @@
 Usage: python3 tools/audit_diff.py OLD_AUDIT.json NEW_AUDIT.json [OUT.json]
 
 For every query present in both audits, compares the physical-plan
-shape counters (shuffles, bhj/smj/shj/nlj) and records whether the
-plan is identical. Purpose: make bench-drift disputes artifact-
+shape counters (shuffles, bhj/smj/shj/nlj, single-partition windows)
+and records whether the plan is identical. Purpose: make bench-drift disputes artifact-
 decidable — a query whose plan is identical across rounds but whose
 driver bench reading is slower is WINDOW DRIFT by construction (hot
 box during the sweep), not a code regression, so the re-measure
 protocol applies without debate.
+
+Both audits must describe the same kind of plans: an AUDIT.json without
+a "plans" key predates the executed-plan audit and counts as "static".
+A static-vs-executed pair is refused with a one-line reason instead
+of being read as a plan change on every query.
 
 Output (OUT.json, default AUDIT_diff.json):
   {"old_sf": ..., "new_sf": ...,
@@ -20,7 +25,7 @@ Output (OUT.json, default AUDIT_diff.json):
 import json
 import sys
 
-KEYS = ("shuffles", "bhj", "smj", "shj", "nlj")
+KEYS = ("shuffles", "bhj", "smj", "shj", "nlj", "single_partition_windows")
 
 
 def shape(entry):
@@ -32,6 +37,10 @@ def main(argv):
     out_path = argv[3] if len(argv) > 3 else "AUDIT_diff.json"
     old = json.load(open(old_path))
     new = json.load(open(new_path))
+    kinds = (old.get("plans", "static"), new.get("plans", "static"))
+    if kinds[0] != kinds[1]:
+        sys.exit(f"refusing to diff {kinds[0]} plans ({old_path}) "
+                 f"against {kinds[1]} plans ({new_path})")
     oq, nq = old["queries"], new["queries"]
     common = sorted(set(oq) & set(nq))
     changed = {}
